@@ -1,0 +1,1 @@
+"""The ella-spark benchmark; run it with ``python3 perfbench/run.py``."""
